@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.{EngineConf, Topology}
 import graft.operators.Grep
 import graft.streaming.{RainStormApps, RainStormJob}
 
@@ -16,7 +17,7 @@ import graft.streaming.{RainStormApps, RainStormJob}
 object Main {
 
   private def session(name: String): SparkSession = {
-    val s = SparkSession.builder()
+    val s = Topology(EngineConf(SparkSession.builder())
       .appName(name)
       // spark-submit injects the real master on a cluster; default to
       // local[*] so the CLI also runs standalone.
@@ -25,7 +26,7 @@ object Main {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.core.EngineConf
 
 /** The record model of the reference engine: a (key, value) string pair
   * (reference src/Streaming/worker.py:52-62 `encode_key_val`/`decode_key_val`,
@@ -55,9 +56,11 @@ final case class StatefulCountOp(keyOf: KV => String) extends RainStormOp
 object RainStormJob {
 
   /** Text-file line source with provenance keys, the analogue of the HyDFS
-    * line source (worker.py:473-520): key = "<file>:<line-id>". */
+    * line source (worker.py:473-520): key = "<file>:<line-id>". The default
+    * batch cap equals the session's driver-listing bound (`EngineConf`), so
+    * a micro-batch's files are listed on the driver, not by a Spark job. */
   def lineSource(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 100): DataFrame = {
+      maxFilesPerTrigger: Int = EngineConf.DriverListingMaxPaths): DataFrame = {
     import spark.implicits._
     // Provenance key = file + content hash (monotonically_increasing_id is
     // not allowed on streams). The reference's "<file>:<lineno>" key exists

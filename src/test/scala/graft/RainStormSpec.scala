@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -146,5 +147,72 @@ class RainStormSpec extends AnyFunSuite {
       new java.io.File(root, "ckpt").getPath, stateful = false)
     q.awaitTermination()
     assert(readOut(out).size == 2 * (0 until 100).count(_ % 5 != 0))
+  }
+
+  // --- micro-batch file listing (EngineConf.DriverListingMaxPaths) ---
+
+  /** Distributed leaf-listing jobs launched so far in this JVM. */
+  private def listingJobs: Long =
+    HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+
+  /** Runs `body` with the session's listing threshold back at Spark's
+    * default (32): the control arm that shows the counter can move. */
+  private def atSparkDefaultListing[T](body: => T): T = {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Stages 40 one-line CSV files (more than Spark's default threshold,
+    * fewer than the line source's batch cap), drains them through
+    * `RainStormJob.start` and checks the output is exactly once. Returns
+    * the listing jobs the drain launched. */
+  private def drain40(tag: String): Long = {
+    val root = Files.createTempDirectory(s"rs-listing-$tag").toFile
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    val out = new java.io.File(root, "out")
+    (0 until 40).foreach(i => writeCsv(in, i, i + 1))
+    val before = listingJobs
+    val q = RainStormJob.start(spark, in.getPath,
+      RainStormApps.simpleApp(".", 0, 3), out.getPath,
+      new java.io.File(root, "ckpt").getPath, stateful = false)
+    q.awaitTermination()
+    val jobs = listingJobs - before
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    assert(readOut(out).sorted == (0 until 40).map(i => s"$i:cat${i % 5}").sorted)
+    jobs
+  }
+
+  test("a 40-file micro-batch lists its files on the driver") {
+    assert(drain40("engine") == 0)
+  }
+
+  test("control: at Spark's default threshold the same drain runs a listing job") {
+    assert(atSparkDefaultListing(drain40("control")) > 0)
+  }
+
+  /** `Grep.grepLogs` over a glob matching 40 files; checks the matches and
+    * returns the listing jobs it launched. */
+  private def grep40(tag: String): Long = {
+    val dir = Files.createTempDirectory(s"grep-listing-$tag").toFile
+    (0 until 40).foreach { i =>
+      Files.write(new java.io.File(dir, f"host$i%02d.log").toPath,
+        s"GET /a $i\nPOST /b $i\n".getBytes("UTF-8"))
+    }
+    val before = listingJobs
+    val lines = graft.operators.Grep.grepLogs(spark, s"$dir/*.log", "^GET")
+    val jobs = listingJobs - before
+    assert(lines.select("value").as[String].collect().sorted.toSeq ==
+      (0 until 40).map(i => s"GET /a $i").sorted)
+    jobs
+  }
+
+  test("dgrep over a glob of 40 files lists them on the driver") {
+    assert(grep40("engine") == 0)
+  }
+
+  test("control: at Spark's default threshold the same grep runs a listing job") {
+    assert(atSparkDefaultListing(grep40("control")) > 0)
   }
 }
